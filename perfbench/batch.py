@@ -1,21 +1,25 @@
 """``topic_batch``: closed-loop batch analytics over the registry
 (``plans/queries.py``).
 
-One client runs the roster pass after pass. The first pass is the
-untimed warm pass: each query's rows are collected and compared with
-its DuckDB ``oracle_sql()``. Then whole timed passes, as many as it
-takes to fill ``seconds``, run the roster in an order drawn from the
-seed and time ``Query.build`` plus ``count()``; every count must equal
-the warm pass's row count.
+One client runs the roster pass after pass over the sf0.01 test tables
+of ``TESTDATA.md``, copied into ``perfbench/data``. The first pass is
+the untimed warm pass: each query's rows are collected, to be compared
+with its DuckDB ``oracle_sql()`` once the run's measurements have
+ended. Then whole timed passes, as many as it takes to fill
+``seconds``, run the roster in an order drawn from the seed and time
+``Query.build`` plus ``count()``; every count must equal the warm
+pass's row count.
 """
 
 from __future__ import annotations
 
+import os
 import random
 import time
 
 import oracle
-import procmem
+
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 # A subset of the registry: about one row per TPC-H shape, per Pulsar
 # data-plane family and per UDF family. JVM start-up and the cold warm
@@ -103,8 +107,24 @@ def check_against_oracle(con, query: str, rows, cols) -> str | None:
     return oracle.mismatch(rows, cols, cur.fetchall(), [d[0] for d in cur.description])
 
 
-def run_batch(spark, tracer, tables_dir: str, seed: int, seconds: int, con,
-              plant_wrong_row: bool = False) -> dict:
+def check_warm(con, warm: list, plant_wrong_row: bool = False) -> list[str]:
+    """Wrong results of the warm pass against the DuckDB oracle; [] when right."""
+    wrong: list[str] = []
+    for ex in warm:
+        if ex.error or ex.rows is None:
+            continue
+        rows, cols = ex.rows
+        if plant_wrong_row and not wrong and rows:
+            rows = plant_wrong_row_in(rows)
+        bad = check_against_oracle(con, ex.query, rows, cols)
+        if bad:
+            wrong.append(f"{ex.query}: {bad}")
+    return wrong
+
+
+def run_batch(spark, tracer, tables_dir: str, seed: int, seconds: int, cpu) -> dict:
+    """Runs the warm pass and the timed passes; ``cpu`` is the
+    ``procmem.CpuWindow`` that measures the timed passes."""
     wrong: list[str] = []
     expected_rows: dict[str, int] = {}
     warm: list[Execution] = []
@@ -113,20 +133,13 @@ def run_batch(spark, tracer, tables_dir: str, seed: int, seconds: int, con,
         for module, query in ROSTER:
             for ex in _run_one(spark, tracer, tables_dir, module, query, "warm", collect=True):
                 warm.append(ex)
-                if ex.error or ex.rows is None:
-                    continue
-                rows, cols = ex.rows
-                if plant_wrong_row and not wrong and rows:
-                    rows = plant_wrong_row_in(rows)
-                bad = check_against_oracle(con, ex.query, rows, cols)
-                if bad:
-                    wrong.append(f"{ex.query}: {bad}")
-                expected_rows[ex.query] = len(rows)
+                if ex.error is None and ex.rows is not None:
+                    expected_rows[ex.query] = len(ex.rows[0])
     warm_s = time.perf_counter() - t_warm0
 
     rng = random.Random(seed)
     timed: list[Execution] = []
-    cpu0 = procmem.tree_cpu_s()
+    cpu.start()
     t0 = time.perf_counter()
     with tracer.span("timed", "bench"):
         # whole passes only, so every run times the same mix of queries
@@ -140,4 +153,4 @@ def run_batch(spark, tracer, tables_dir: str, seed: int, seconds: int, con,
                         wrong.append(f"{ex.query}: timed count {ex.rows} != warm {expected_rows.get(ex.query)}")
     timed_s = time.perf_counter() - t0
     return {"warm": warm, "timed": timed, "warm_s": warm_s, "timed_s": timed_s,
-            "timed_cpu_s": procmem.tree_cpu_s() - cpu0, "wrong": wrong}
+            "timed_cpu_s": cpu.stop(), "wrong": wrong}

@@ -12,7 +12,8 @@ from __future__ import annotations
 import math
 import os
 
-from tables import TABLES
+TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings"]
 
 
 def norm_cell(v):

@@ -3,8 +3,9 @@
     python3 perfbench/run.py --workload topic_batch --seed 1 --seconds 8 --trace 0
 
 Workloads: ``topic_batch`` (closed loop, one client, registry queries
-over seeded batch tables) and ``topic_stream`` (open loop, a generator
-process feeding one topic read by two subscriptions). See
+over the sf0.01 test tables in ``perfbench/data``) and
+``topic_stream`` (open loop, a generator process feeding one topic read
+by two subscriptions). See
 ``perfbench/README.md`` for what each measures and why.
 
 The last stdout line is one JSON object: ``correct``, ``attempted``,
@@ -33,8 +34,10 @@ WORKLOADS = ("topic_batch", "topic_stream")
 MASTER = "local[4]"
 SHUFFLE_PARTITIONS = 4
 DRIVER_MEMORY = "1g"
-SETUP_SAMPLES = 3
-SCALE = 0.01  # of the TPC-H scale factor: 60,000 lineitem rows
+# session rebuilds per run. The first WARM_REBUILDS get faster as the JIT
+# compiles the rebuild path; setup_s is the median of the rest.
+REBUILDS = 12
+WARM_REBUILDS = 4
 MODULES = ("plans", "operators", "functions")
 LAYER_COUNTERS = ("build_s", "action_s", "jobs", "stages", "tasks", "driver_gap_s",
                   "useful_task_ratio", "task_s", "cpu_s", "gc_s", "scan_s",
@@ -50,9 +53,9 @@ END_TO_END_UNITS = {"setup_s": "s", "cpu_ms_per_op": "ms", "peak_rss_mb": "MB"}
 
 def per_layer_units() -> dict[str, str]:
     """Every per-layer metric name -> unit; all are reported on every workload."""
-    unit = lambda n: ("s" if n.endswith("_s") else "ms" if n.endswith("_ms")  # noqa: E731
-                      else "MB" if n.endswith("_mb") else "1/s" if n.endswith("_eps")
-                      else "ratio" if n.endswith("_ratio") else "count")
+    suffixes = [(("_per_s", "_eps"), "1/s"), (("_s",), "s"), (("_ms", "_ms_per_op"), "ms"),
+                (("_mb",), "MB"), (("_ratio",), "ratio")]
+    unit = lambda n: next((u for ends, u in suffixes if n.endswith(ends)), "count")  # noqa: E731
     names = ["session.start_s", "session.restart_s", "session.warm_s", "session.self_s"]
     names += [f"{m}.{c}" for m in MODULES for c in LAYER_COUNTERS]
     names += ["functions.index_build_s", "functions.index_probe_s"]
@@ -64,7 +67,7 @@ def per_layer_units() -> dict[str, str]:
     names += ["streaming.keyed.py_worker_s", "streaming.keyed.arrow_to_py_mb", "streaming.self_s"]
     names += ["sources.backlog_files_max", "sources.backlog_growth_files",
               "sources.files_per_batch", "sources.drain_s", "sources.self_s"]
-    names += ["bench.gen_late_ms", "trace.overhead_ratio"]
+    names += ["jvm.jit_cpu_ms_per_op", "bench.gen_late_ms", "trace.overhead_ratio"]
     return {n: unit(n) for n in names}
 
 
@@ -103,8 +106,10 @@ class Run:
              "spark.ui.showConsoleProgress": "false",
              "spark.local.dir": self.tmp,
              "spark.sql.warehouse.dir": os.path.join(self.tmp, "warehouse"),
-             # no hsperfdata file in /tmp: a run writes only inside its checkout
-             "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={self.tmp} -XX:-UsePerfData"}
+             # no hsperfdata file in /tmp: a run writes only inside its checkout;
+             # compiler threads that never exit keep their CPU countable
+             "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={self.tmp} -XX:-UsePerfData "
+                                              "-XX:-UseDynamicNumberOfCompilerThreads"}
         if self.args.trace:
             os.makedirs(self.eventlog, exist_ok=True)
             c.update({"spark.eventLog.enabled": "true", "spark.eventLog.compress": "false",
@@ -121,13 +126,14 @@ class Run:
         return spark
 
     def setup(self) -> list[float]:
-        """Builds the session SETUP_SAMPLES times; the first sample runs
-        from process start (imports and JVM launch included)."""
+        """Builds the session 1 + REBUILDS times. The first sample runs
+        from process start (imports and JVM launch included); each
+        rebuild stops the session and builds it again in the same JVM."""
         samples = []
         with self.tracer.span("setup", "bench"):
             self.spark = self.session()
             samples.append(time.time() - _process_start())
-            for _ in range(SETUP_SAMPLES - 1):
+            for _ in range(REBUILDS):
                 self.spark.stop()
                 t0 = time.perf_counter()
                 self.spark = self.session()
@@ -152,7 +158,7 @@ class Run:
         self.spark = None
 
 
-def _batch(run: Run, con, tables_dir: str) -> tuple[dict, dict, list[str]]:
+def _batch(run: Run, cpu) -> tuple[dict, dict, list[str]]:
     import batch
     from stream import pct
     from incubator_pulsar_spark.plans import queries
@@ -161,14 +167,14 @@ def _batch(run: Run, con, tables_dir: str) -> tuple[dict, dict, list[str]]:
     # directory; point it inside the run directory
     scratch = os.path.join(run.tmp, "scratch")
     queries._scratch = lambda tag, sf_dir: os.path.join(scratch, tag)
-    r = batch.run_batch(run.spark, run.tracer, tables_dir, run.args.seed,
-                        run.args.seconds, con, plant_wrong_row=run.args.plant_wrong_row)
+    r = batch.run_batch(run.spark, run.tracer, batch.DATA, run.args.seed, run.args.seconds, cpu)
     ok = [e for e in r["timed"] if e.error is None]
     lat = [e.wall_s for e in ok]
     everything = r["warm"] + r["timed"]
     out = {
         "throughput_per_s": len(ok) / r["timed_s"],
         "cpu_ms_per_op": r["timed_cpu_s"] * 1000 / max(1, len(ok)),
+        "jit_ms_per_op": cpu.jit_s * 1000 / max(1, len(ok)),
         "latency_p50_ms": statistics.median(lat) * 1000 if lat else 0.0,
         "latency_p90_ms": pct(lat, 0.9) * 1000,
         "warm_s": r["warm_s"],
@@ -176,6 +182,8 @@ def _batch(run: Run, con, tables_dir: str) -> tuple[dict, dict, list[str]]:
         "failed": sum(e.error is not None for e in everything),
         "errors": [f"{e.query}: {e.error}" for e in everything if e.error],
         "timed": ok,
+        # the DuckDB check runs after the measurements end
+        "check": lambda con: batch.check_warm(con, r["warm"], run.args.plant_wrong_row),
     }
     report = {"queries_per_s": (out["throughput_per_s"], "1/s"),
               "cpu_ms_per_query": (out["cpu_ms_per_op"], "ms"),
@@ -185,16 +193,17 @@ def _batch(run: Run, con, tables_dir: str) -> tuple[dict, dict, list[str]]:
     return out, report, r["wrong"]
 
 
-def _stream(run: Run, con) -> tuple[dict, dict, list[str]]:
+def _stream(run: Run, cpu) -> tuple[dict, dict, list[str]]:
     import stream
     from stream import pct
 
     r = stream.run_stream(run.spark, run.tracer, run.run_dir, run.args.seed,
-                          run.args.seconds, con)
+                          run.args.seconds, cpu)
     ks, vs = r["per_sub"]["keyed"], r["per_sub"]["view"]
     out = {
         "throughput_per_s": r["drain_eps"],
         "cpu_ms_per_op": r["cpu_ms_per_event"],
+        "jit_ms_per_op": cpu.jit_s * 1000 / r["measured_events"],
         "latency_p50_ms": pct(r["latency_ms"], 0.5),
         "latency_p90_ms": pct(r["latency_ms"], 0.9),
         "warm_s": r["warm_s"],
@@ -202,6 +211,7 @@ def _stream(run: Run, con) -> tuple[dict, dict, list[str]]:
         "failed": r["undelivered_events"],
         "errors": [],
         "stream": r,
+        "check": lambda con: stream.check_run(con, r),
     }
     report = {"drain_eps": (r["drain_eps"], "1/s"),
               "cpu_ms_per_event": (out["cpu_ms_per_op"], "ms"),
@@ -213,7 +223,11 @@ def _stream(run: Run, con) -> tuple[dict, dict, list[str]]:
               "measured_files": (len(r["latency_ms"]), "count")}
     for f in r["flags"]:
         print(f"# FLAG {run.workload}: {f}", file=sys.stderr)
-    return out, report, r["wrong"]
+    return out, report, []
+
+
+def _setup_s(setup: list[float]) -> float:
+    return statistics.median(setup[1 + WARM_REBUILDS:])
 
 
 def _per_layer(run: Run, out: dict, setup: list[float], wall_s: float,
@@ -222,7 +236,7 @@ def _per_layer(run: Run, out: dict, setup: list[float], wall_s: float,
 
     m = {n: 0.0 for n in per_layer_units()}
     m["session.start_s"] = setup[0]
-    m["session.restart_s"] = statistics.median(setup[1:]) if len(setup) > 1 else 0.0
+    m["session.restart_s"] = _setup_s(setup)
     m["session.warm_s"] = out["warm_s"]
     selfs = tracing.self_time_by_module(run.tracer.spans)
     for mod in ("session", "streaming", "sources") + MODULES:
@@ -230,6 +244,7 @@ def _per_layer(run: Run, out: dict, setup: list[float], wall_s: float,
     for k in ("throughput_per_s", "latency_p50_ms", "latency_p90_ms"):
         m[f"wall.{k}"] = out[k]
     m["bench.host_steal_ratio"] = steal_ratio
+    m["jvm.jit_cpu_ms_per_op"] = out["jit_ms_per_op"]
     jobs = tracing.read_event_log(run.eventlog)
     if "timed" in out:
         for mod in MODULES:
@@ -280,11 +295,12 @@ def main(argv=None) -> int:
     os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"  # the launcher JVM too
     sys.path[:0] = [ROOT, HERE]
 
+    import batch
     import oracle
     import procmem
-    import tables
 
     rss = procmem.PeakRss().start()
+    cpu = procmem.CpuWindow(rss)
     ticks0 = _cpu_ticks()
     run = Run(args)
     os.environ["TMPDIR"] = tempfile.tempdir = run.tmp
@@ -294,13 +310,9 @@ def main(argv=None) -> int:
         setup = run.setup()
         phases["setup"] = time.perf_counter() - t_start
         if run.workload == "topic_stream":
-            con = oracle.duckdb_con(None, os.path.join(run.tmp, "duckdb"))
-            out, report, wrong = _stream(run, con)
+            out, report, wrong = _stream(run, cpu)
         else:
-            tables_dir = tables.write(os.path.join(run.run_dir, "tables"), args.seed, SCALE)
-            con = oracle.duckdb_con(tables_dir, os.path.join(run.tmp, "duckdb"))
-            out, report, wrong = _batch(run, con, tables_dir)
-        con.close()
+            out, report, wrong = _batch(run, cpu)
         phases["workload"] = time.perf_counter() - t_start - phases["setup"]
     finally:
         t_stop = time.perf_counter()
@@ -311,12 +323,18 @@ def main(argv=None) -> int:
     steal_ratio = dt[7] / max(1, sum(dt))  # host time taken by other guests
     wall_s = time.perf_counter() - t_start
 
-    e2e = {"setup_s": statistics.median(setup), "cpu_ms_per_op": out["cpu_ms_per_op"],
+    con = oracle.duckdb_con(None if run.workload == "topic_stream" else batch.DATA,
+                            os.path.join(run.tmp, "duckdb"))
+    wrong = wrong + out["check"](con)
+    con.close()
+
+    e2e = {"setup_s": _setup_s(setup), "cpu_ms_per_op": out["cpu_ms_per_op"],
            "peak_rss_mb": peak_mb}
     failed_ratio = out["failed"] / max(1, out["attempted"])
     report.update({"setup_s": (e2e["setup_s"], "s"), "peak_rss_mb": (peak_mb, "MB"),
                    "failed_ratio": (failed_ratio, "ratio"),
                    "wrong_results": (len(wrong), "count"),
+                   "jit_cpu_ms_per_op": (out["jit_ms_per_op"], "ms"),
                    "host_steal_ratio": (steal_ratio, "ratio")})
     for name, (value, unit) in report.items():
         print(f"# {run.workload} {name} {value:.6g} {unit}")
@@ -341,7 +359,7 @@ def main(argv=None) -> int:
                    "pss_samples_mb": [round(kb / 1024) for kb in rss.samples_kb],
                    "timed": [(e.query, round(e.wall_s, 4)) for e in out.get("timed", [])],
                    "batches": out.get("stream", {}).get("batches", {})}, f, indent=1)
-    for d in ("tables", "topic", "tmp", "ck-keyed", "ck-view"):
+    for d in ("topic", "tmp", "ck-keyed", "ck-view"):
         shutil.rmtree(os.path.join(run.run_dir, d), ignore_errors=True)
     print(json.dumps(result))
     return 0

@@ -47,33 +47,45 @@ TOPIC_DDL = ("topic STRING, partition INT, sequence BIGINT, key STRING, value BI
              "deliver_at TIMESTAMP, redelivery_count INT, due_ms BIGINT")
 
 
-def source_log(checkpoint: str) -> dict[str, int]:
-    """file name -> lowest micro-batch id that read it.
+class SourceLog:
+    """file name -> lowest micro-batch id that read it, from the
+    file-source log in a checkpoint.
 
-    The file-source log writes one file per batch and folds every tenth
-    into ``<n>.compact``, which repeats all earlier entries; keeping the
-    lowest id per path undoes the repetition."""
-    d = os.path.join(checkpoint, "sources", "0")
-    out: dict[str, int] = {}
-    if not os.path.isdir(d):
-        return out
-    for name in os.listdir(d):
-        if name.startswith(".") or name.endswith(".tmp"):
-            continue
-        try:
-            batch = int(name.split(".")[0])
-            with open(os.path.join(d, name)) as f:
-                lines = f.read().splitlines()[1:]
-        except (ValueError, FileNotFoundError):
-            continue
-        for line in lines:
-            if not line.strip():
+    The log writes one file per batch and folds every tenth into
+    ``<n>.compact``, which repeats all earlier entries; keeping the
+    lowest id per path undoes the repetition. Log files appear by an
+    atomic rename and never change, so each is parsed once."""
+
+    def __init__(self, checkpoint: str):
+        self.dir = os.path.join(checkpoint, "sources", "0")
+        self.batch_of: dict[str, int] = {}
+        self._parsed: set[str] = set()
+
+    def read(self) -> dict[str, int]:
+        if not os.path.isdir(self.dir):
+            return self.batch_of
+        for name in os.listdir(self.dir):
+            if name in self._parsed or name.startswith(".") or name.endswith(".tmp"):
                 continue
-            entry = json.loads(line)
-            base = os.path.basename(entry["path"])
-            if base not in out or batch < out[base]:
-                out[base] = batch
-    return out
+            try:
+                batch = int(name.split(".")[0])
+                with open(os.path.join(self.dir, name)) as f:
+                    lines = f.read().splitlines()[1:]
+            except (ValueError, FileNotFoundError):
+                continue
+            self._parsed.add(name)
+            for line in lines:
+                if not line.strip():
+                    continue
+                base = os.path.basename(json.loads(line)["path"])
+                if base not in self.batch_of or batch < self.batch_of[base]:
+                    self.batch_of[base] = batch
+        return self.batch_of
+
+
+def source_log(checkpoint: str) -> dict[str, int]:
+    """A one-off ``SourceLog`` read."""
+    return dict(SourceLog(checkpoint).read())
 
 
 def pct(values, q):
@@ -93,11 +105,14 @@ class Subscription:
         self.returned: dict[int, float] = {}  # batch id -> sink return time
         self.folded: dict = {}
         self.dropped_late = 0
+        self.fold_cpu_s = 0.0  # CPU time of the folding below: benchmark work
         self.query = None
         self._lock = threading.Lock()
+        self._log = SourceLog(checkpoint)
 
     def sink(self, df, batch_id: int) -> None:
         rows = df.collect()
+        t_cpu = time.thread_time()
         with self._lock:
             if self.name == "keyed":
                 for state, next_state, n_delta, n_dropped in rows:
@@ -109,13 +124,15 @@ class Subscription:
                 for key, value, seq in rows:
                     if key not in self.folded or seq > self.folded[key][1]:
                         self.folded[key] = (bytes(value), seq)
+            self.fold_cpu_s += time.thread_time() - t_cpu
             self.returned[batch_id] = time.time()
 
     def delivered(self) -> dict[str, float]:
-        """file name -> return time of the sink call that emitted it."""
+        """file name -> return time of the sink call that emitted it
+        (call from one thread only)."""
         with self._lock:
             ret = dict(self.returned)
-        return {f: ret[b] for f, b in source_log(self.checkpoint).items() if b in ret}
+        return {f: ret[b] for f, b in self._log.read().items() if b in ret}
 
     def progress(self) -> list[dict]:
         return [json.loads(p.json()) for p in self.query._jsq.recentProgress()]
@@ -156,7 +173,7 @@ def _run_generator(run_dir: str, topic: str, seed: int, first: int, files: int,
 
 def _wait_for(files: list[str], subs, deadline: float) -> bool:
     while time.time() < deadline:
-        if all(all(f in s.delivered() for f in files) for s in subs):
+        if all(s.delivered().keys() >= set(files) for s in subs):
             return True
         for s in subs:
             if s.query.exception() is not None:
@@ -205,6 +222,12 @@ def check_stream(keyed: dict, view: dict, dropped_late: int, expected) -> list[s
     return wrong
 
 
+def check_run(con, r: dict) -> list[str]:
+    """Wrong results of a ``run_stream`` result against DuckDB over its topic."""
+    keyed, view, dropped_late = r["folded"]
+    return check_stream(keyed, view, dropped_late, _duckdb_expected(con, r["topic"]))
+
+
 def _batch_stats(progress: list[dict], t_lo: float, t_hi: float) -> dict:
     """Means over the micro-batches of the run that read input."""
     batches = [p for p in progress if "addBatch" in p.get("durationMs", {})]
@@ -236,8 +259,10 @@ def _batch_stats(progress: list[dict], t_lo: float, t_hi: float) -> dict:
     }
 
 
-def run_stream(spark, tracer, run_dir: str, seed: int, seconds: int, con) -> dict:
-    """Runs both phases; returns measurements, checks and the flags raised."""
+def run_stream(spark, tracer, run_dir: str, seed: int, seconds: int, cpu) -> dict:
+    """Runs both phases; returns measurements and the flags raised.
+    ``cpu`` is the ``procmem.CpuWindow`` that measures the two phases;
+    the benchmark's own work in them is excluded from it."""
     topic = os.path.join(run_dir, "topic")
     os.makedirs(topic, exist_ok=True)
     n_live = max(1, round(seconds / LIVE_INTERVAL_S))
@@ -245,7 +270,12 @@ def run_stream(spark, tracer, run_dir: str, seed: int, seconds: int, con) -> dic
 
     def generate(first: int, files: int, interval_s: float, tag: str, burst=False) -> dict:
         gen = _run_generator(run_dir, topic, seed, first, files, interval_s, tag, burst)
-        if gen.wait() != 0:
+        cpu.rss.excluded.add(gen.pid)
+        reaped0 = procmem.reaped_children_cpu_s()
+        code = gen.wait()
+        cpu.exclude(procmem.reaped_children_cpu_s() - reaped0)
+        cpu.rss.excluded.discard(gen.pid)
+        if code != 0:
             raise RuntimeError(f"stream generator failed ({tag})")
         with open(os.path.join(run_dir, f"gen-{tag}.json")) as f:
             return json.load(f)
@@ -264,7 +294,9 @@ def run_stream(spark, tracer, run_dir: str, seed: int, seconds: int, con) -> dic
         raise RuntimeError("subscriptions did not emit the warm-up files")
     warm_s = time.time() - t_start
 
-    cpu0 = procmem.tree_cpu_s()
+    fold0 = sum(s.fold_cpu_s for s in subs)
+    cpu.start()
+    main0 = time.thread_time()  # this thread only generates and polls
     with tracer.span("drain", "bench"):
         drain_span = tracer.current()
         landed = generate(WARM_FILES, BACKLOG_FILES, 0.0, "backlog", burst=True)["landed_at"]
@@ -281,13 +313,15 @@ def run_stream(spark, tracer, run_dir: str, seed: int, seconds: int, con) -> dic
 
     backlog_samples: list[tuple[float, int]] = []
     stop_sampling = threading.Event()
+    sampler_cpu_s = [0.0]
     n_landed = lambda: sum(1 for n in os.listdir(topic) if n.endswith(".parquet"))  # noqa: E731
 
     def sample_backlog():
+        logs = [SourceLog(s.checkpoint) for s in subs]
         while not stop_sampling.is_set():
             on_disk = n_landed()
-            backlog_samples.append(
-                (time.time(), max(on_disk - len(source_log(s.checkpoint)) for s in subs)))
+            backlog_samples.append((time.time(), max(on_disk - len(g.read()) for g in logs)))
+            sampler_cpu_s[0] = time.thread_time()
             stop_sampling.wait(0.25)
 
     with tracer.span("live", "bench"):
@@ -301,9 +335,11 @@ def run_stream(spark, tracer, run_dir: str, seed: int, seconds: int, con) -> dic
             t_gen_end = time.time()
             live_files = names(live_first, n_live)
             _wait_for(live_files, subs, time.time() + GRACE_S)
-            cpu_s = procmem.tree_cpu_s() - cpu0
             stop_sampling.set()
             sampler.join(timeout=5)
+            cpu.exclude(time.thread_time() - main0 + sampler_cpu_s[0]
+                        + sum(s.fold_cpu_s for s in subs) - fold0)
+            cpu_s = cpu.stop()
 
     progress = {s.name: s.progress() for s in subs}
     for s in subs:
@@ -337,8 +373,6 @@ def run_stream(spark, tracer, run_dir: str, seed: int, seconds: int, con) -> dic
             tracer.add(f"microbatch:{s.name}:{p['batchId']}", "streaming", t,
                        t + p["durationMs"]["triggerExecution"] / 1000, parent)
 
-    wrong = check_stream(subs[0].folded, subs[1].folded, subs[0].dropped_late,
-                         _duckdb_expected(con, topic))
     files_per_batch = [len(all_files) / max(1, len(set(source_log(s.checkpoint).values())))
                        for s in subs]
     return {
@@ -347,8 +381,10 @@ def run_stream(spark, tracer, run_dir: str, seed: int, seconds: int, con) -> dic
         "events": len(all_files) * stream_gen.EVENTS_PER_FILE,
         # process-tree CPU over the drain and live phases, per event they carried
         "cpu_ms_per_event": cpu_s * 1000 / (len(backlog + live_files) * stream_gen.EVENTS_PER_FILE),
+        "measured_events": len(backlog + live_files) * stream_gen.EVENTS_PER_FILE,
         "undelivered_events": undelivered * stream_gen.EVENTS_PER_FILE,
-        "wrong": wrong,
+        "topic": topic,
+        "folded": (subs[0].folded, subs[1].folded, subs[0].dropped_late),
         "flags": flags,
         "warm_s": warm_s,
         "gen_late_ms": status["late_ms_max"],

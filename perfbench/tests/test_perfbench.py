@@ -19,7 +19,6 @@ import batch  # noqa: E402
 import oracle  # noqa: E402
 import stream  # noqa: E402
 import stream_gen  # noqa: E402
-import tables  # noqa: E402
 
 
 def _gen(tmp_path, name, seed, files=3):
@@ -85,11 +84,37 @@ def test_source_log_keeps_lowest_batch_across_compact_files(tmp_path):
     assert stream.source_log(str(tmp_path / "ck")) == {"a.parquet": 0, "b.parquet": 1, "c.parquet": 9}
 
 
+def test_source_log_reader_parses_new_files_only(tmp_path):
+    d = tmp_path / "ck" / "sources" / "0"
+    d.mkdir(parents=True)
+    entry = lambda n: '{"path":"file:///t/%s","timestamp":1,"batchId":0}' % n  # noqa: E731
+    log = stream.SourceLog(str(tmp_path / "ck"))
+    assert log.read() == {}
+    (d / "0").write_text("v1\n" + entry("a.parquet") + "\n")
+    assert log.read() == {"a.parquet": 0}
+    (d / "1").write_text("v1\n" + entry("b.parquet") + "\n")
+    assert log.read() == {"a.parquet": 0, "b.parquet": 1}
+    assert log._parsed == {"0", "1"}
+
+
+def test_excluded_helper_process_is_not_in_the_tree():
+    import subprocess
+
+    import procmem
+
+    p = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(30)"])
+    try:
+        assert p.pid in procmem._tree_stats(os.getpid())
+        assert p.pid not in procmem._tree_stats(os.getpid(), frozenset({p.pid}))
+    finally:
+        p.kill()
+        p.wait()
+
+
 @pytest.fixture(scope="module")
 def duck(tmp_path_factory):
-    d = tmp_path_factory.mktemp("tables")
-    tables.write(str(d), seed=3, scale=0.001)
-    con = oracle.duckdb_con(str(d), str(d / "duckdb"))
+    d = tmp_path_factory.mktemp("duckdb")
+    con = oracle.duckdb_con(batch.DATA, str(d))
     yield con
     con.close()
 
@@ -101,7 +126,7 @@ def test_planted_wrong_row_is_a_wrong_result(duck, query):
 
     cur = duck.execute(ALL_QUERIES[query].oracle)
     cols, rows = [d[0] for d in cur.description], cur.fetchall()
-    assert rows, "the generated tables must give this query rows"
+    assert rows, "the tables must give this query rows"
     assert batch.check_against_oracle(duck, query, rows, cols) is None
     assert batch.check_against_oracle(duck, query, batch.plant_wrong_row_in(rows), cols)
 
