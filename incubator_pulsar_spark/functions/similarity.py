@@ -447,18 +447,22 @@ def auto_block_planes(n_rows: int, *, target_bucket: int = 4096,
     return min(hi, max(lo, math.ceil(math.log2(max(n_rows, 1) / target_bucket))))
 
 
-def _pair_dot_udf():
-    """Arrow-batched pair dot product; marked nondeterministic so
-    Catalyst evaluates it ONCE instead of duplicating it into pushed-down
-    filter branches (measured 3× penalty when deterministic)."""
+def _pair_cosine(va: str, na: str, vb: str, nb: str) -> Column:
+    """Pair cosine over precomputed norms (columns ``na``/``nb``), 0.0
+    when either norm is 0. The dot is an Arrow-batched pandas UDF
+    marked nondeterministic so Catalyst evaluates it ONCE instead of
+    duplicating it into pushed-down filter branches (measured 3×
+    penalty when deterministic)."""
 
     @F.pandas_udf("double")
-    def pd_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
+    def pd_dot(a: pd.Series, b: pd.Series) -> pd.Series:
         import numpy as np
 
-        return pd.Series((np.stack(va.to_numpy()) * np.stack(vb.to_numpy())).sum(axis=1))
+        return pd.Series((np.stack(a.to_numpy()) * np.stack(b.to_numpy())).sum(axis=1))
 
-    return pd_dot.asNondeterministic()
+    dot = pd_dot.asNondeterministic()(F.col(va), F.col(vb))
+    return F.when((F.col(na) > 0) & (F.col(nb) > 0),
+                  dot / (F.col(na) * F.col(nb))).otherwise(F.lit(0.0))
 
 
 def cosine_neardup_pairs(
@@ -469,7 +473,7 @@ def cosine_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine ≥ threshold).
 
-    Three physical strategies, one logical result:
+    Two physical forms, one logical result:
 
     - ``block_planes=N`` — LSH-bucket blocking: only same-bucket pairs are
       compared (the 100 TB path; recall < 1 for pairs straddling a
@@ -478,10 +482,6 @@ def cosine_neardup_pairs(
       to every task and matmul a partition's slice against it (the matrix
       analogue of a broadcast join). Fastest when the table fits in one
       executor's memory; numpy BLAS does the N² work.
-    - ``strategy="join"`` — EXPLICIT-ONLY distributed pair join +
-      Arrow-batched dot UDF: an O(N²) non-equi join (plans as a nested
-      loop) that no automatic path ever selects — it exists for small
-      corpora that need exact recall without a driver collect.
     - ``strategy="auto"`` — gram when count ≤ ``gram_max_rows``; above
       that the ONLY sane physical shape is the LSH-blocked equi-join,
       so auto routes there (dim inferred from the first vector).
@@ -498,6 +498,8 @@ def cosine_neardup_pairs(
     Sum order (BLAS/numpy vs sequential fold) differs only in the last
     ulp; outputs are rounded to 6 decimals, far above that noise.
     """
+    if strategy not in ("auto", "gram"):
+        raise ValueError(f"strategy must be 'auto' or 'gram': {strategy!r}")
     e = ensure_parallelism(embeddings).select(
         F.col(id_col).alias("_id"), as_double_array(F.col(vec_col)).alias("_vec"))
 
@@ -526,19 +528,12 @@ def cosine_neardup_pairs(
                      F.col("_norm").alias("_nb"),
                      lsh_bucket_id(F.col("_vec"), planes).alias("_bkt"))
         joined = a.join(b, (a["_bkt"] == b["_bkt"]) & (F.col("id_a") < F.col("id_b")))
-        return _neardup_from_pairs(joined, threshold)
-
-    if strategy == "join":
-        e = e.withColumn("_norm", l2_norm(F.col("_vec")))
-        a = e.select(F.col("_id").alias("id_a"), F.col("_vec").alias("_va"),
-                     F.col("_norm").alias("_na"))
-        b = e.select(F.col("_id").alias("id_b"), F.col("_vec").alias("_vb"),
-                     F.col("_norm").alias("_nb"))
-        joined = a.join(b, F.col("id_a") < F.col("id_b"))
-        return _neardup_from_pairs(joined, threshold)
-
-    if strategy != "gram":
-        raise ValueError(f"unknown strategy: {strategy!r}")
+        sim = _pair_cosine("_va", "_na", "_vb", "_nb")
+        return (
+            joined.select("id_a", "id_b", F.round(sim, 6).alias("cosine_sim"))
+            .filter(F.col("cosine_sim") >= F.lit(threshold))
+            .orderBy("id_a", "id_b")
+        )
 
     import numpy as np
     import pandas as pd_mod
@@ -589,33 +584,6 @@ def cosine_neardup_pairs(
     )
 
 
-def _neardup_from_pairs(joined: DataFrame, threshold: float) -> DataFrame:
-    pd_dot = _pair_dot_udf()
-    sim = F.when((F.col("_na") > 0) & (F.col("_nb") > 0),
-                 pd_dot(F.col("_va"), F.col("_vb"))
-                 / (F.col("_na") * F.col("_nb"))).otherwise(F.lit(0.0))
-    return (
-        joined.select("id_a", "id_b", F.round(sim, 6).alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= F.lit(threshold))
-        .orderBy("id_a", "id_b")
-    )
-
-
-def _zeroed_cosine_matrix(X, nx, Y, ny):
-    """round-6 cosine matrix with the FOLD path's exact zero-norm rule
-    (either norm ≤ 0 ⇒ sim 0.0). Norms come in from the JVM ``l2_norm``
-    column so the denominator is bit-identical to the fold form; only
-    the dot's summation order differs (BLAS vs numpy pairwise), which
-    round-6 absorbs — the ``cosine_topk_gemm`` precedent."""
-    import numpy as np
-
-    den = np.outer(np.where(nx > 0, nx, 1.0), np.where(ny > 0, ny, 1.0))
-    S = np.round((X @ Y.T) / den, 6)
-    S[nx <= 0, :] = 0.0
-    S[:, ny <= 0] = 0.0
-    return S
-
-
 def _exact_cosine_matrix(X, nx, Y, ny):
     """BIT-EXACT twin of the fold path's pair cosine (optimization
     r14, the pq_arrow discipline): the fold scores each pair as
@@ -664,7 +632,7 @@ def _topk_rows(col, dst_ids, valid, k):
 def knn_graph(
     embeddings: DataFrame, k: int = 5, *, n_cells: int | None = None,
     nprobe: int = 2, id_col: str = "vec_id", vec_col: str = "embedding",
-    prune: bool | str = "auto", kernel: str = "gemm",
+    prune: bool | str = "auto", kernel: str = "exact",
 ) -> DataFrame:
     """Approximate k-NN GRAPH over the whole corpus — every vector's
     top-k neighbors (the build step of SemDeDup-style clustering,
@@ -709,38 +677,27 @@ def knn_graph(
     ``n_cells`` defaults to ``auto_n_cells`` so that contract holds
     without the caller remembering it.
 
-    ``kernel`` picks the pair-scoring physical form, same output
-    either way (pytest-parity-locked):
+    ``kernel`` picks the pair-scoring form, same output either way:
 
-    - ``"gemm"`` (default): cogroup probers×members per cell and run
-      ONE BLAS matmul per cell, emitting only each prober's per-cell
-      top-k — vectors ship into the shuffle ONCE per probe instead of
-      once per candidate PAIR, candidate volume drops from |cell| to k
-      rows per probe, and the pair work runs at matmul throughput (the
-      ``cosine_topk_gemm`` adoption, VERDICT r11 #3; measured ×4.1 on
-      the sf0.1 corpus: 5.28 s → 1.28 s). Round-6 absorbs the BLAS
-      summation-order delta from the fold — same values in practice,
-      not provably bit-exact.
-    - ``"exact"``: the gemm cogroup SHAPE with the fold's bit-exact
-      scoring (``_exact_cosine_matrix``: per-row numpy reductions in
-      the fold's own summation tree + ``round_spark`` — the pq_arrow
-      exact-twin discipline, optimization r14). The DuckDB-oracle
-      gate runs this form: fold values to the last bit at gemm-like
-      cost (the per-pair Arrow UDF shipped both vectors once per
-      candidate PAIR — the measured 2.9 s of the 2000-vector gate was
-      almost entirely that transport).
-    - ``"fold"``: the original equi-join + Arrow pair-dot — the
-      parity REFERENCE surface (its BLAS-free summation order is what
-      the SQL replays; ``kernel="exact"`` reproduces it bit-for-bit,
-      locked by tests/test_round14_opt.py).
+    - ``"exact"`` (default, the one production form): cogroup
+      probers×members per cell and score each cell as one matrix,
+      emitting only each prober's per-cell top-k — vectors ship into
+      the shuffle ONCE per probe instead of once per candidate PAIR,
+      and candidate volume drops from |cell| to k rows per probe.
+      Scoring is ``_exact_cosine_matrix``: per-row numpy reductions in
+      the fold's own summation tree + ``round_spark`` (the pq_arrow
+      exact-twin discipline), so the DuckDB oracle sees the fold's
+      values to the last bit.
+    - ``"fold"``: the equi-join + Arrow pair-dot — kept only as the
+      bit-exact REFERENCE the parity tests compare ``"exact"`` against
+      (its summation order is what the SQL replays).
 
     Output: (src_id, dst_id, cosine_sim, rank), k rows per src.
     """
     if prune not in (True, False, "auto"):
         raise ValueError(f"prune must be True, False or 'auto': {prune!r}")
-    if kernel not in ("gemm", "fold", "exact"):
-        raise ValueError(
-            f"kernel must be 'gemm', 'fold' or 'exact': {kernel!r}")
+    if kernel not in ("exact", "fold"):
+        raise ValueError(f"kernel must be 'exact' or 'fold': {kernel!r}")
     n_cells = _resolve_n_cells(embeddings, n_cells)
     cents, pool_unit = _seed_centroids_with_pool(
         embeddings, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
@@ -784,10 +741,7 @@ def knn_graph(
                        F.col("_pr.i").cast("int").alias("cell"),
                        F.col("_pr.s").alias("_ps")))
 
-    pd_dot = _pair_dot_udf()
-    sim = F.when((F.col("_ns") > 0) & (F.col("_nd") > 0),
-                 pd_dot(F.col("_vs"), F.col("_vd"))
-                 / (F.col("_ns") * F.col("_nd"))).otherwise(F.lit(0.0))
+    sim = _pair_cosine("_vs", "_ns", "_vd", "_nd")
 
     def _score_fold(side: DataFrame) -> DataFrame:
         return (side.join(members, "cell")
@@ -795,7 +749,7 @@ def knn_graph(
                 .select("src_id", "dst_id",
                         F.round(sim, 6).alias("cosine_sim")))
 
-    def _score_gemm(side: DataFrame) -> DataFrame:
+    def _score_exact(side: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd  # noqa: F811
         from pyspark.sql import types as T
@@ -805,9 +759,6 @@ def knn_graph(
             T.StructField("src_id", idt), T.StructField("dst_id", idt),
             T.StructField("cosine_sim", T.DoubleType())])
 
-        matfn = (_exact_cosine_matrix if kernel == "exact"
-                 else _zeroed_cosine_matrix)
-
         def fn(left, right):
             if not len(left) or not len(right):
                 return pd.DataFrame(
@@ -816,7 +767,7 @@ def knn_graph(
             M = np.array(right["_vd"].to_list(), dtype="float64")
             src_ids = left["src_id"].to_numpy()
             dst_ids = right["dst_id"].to_numpy()
-            S = matfn(
+            S = _exact_cosine_matrix(
                 P, left["_ns"].to_numpy(dtype="float64"),
                 M, right["_nd"].to_numpy(dtype="float64"))
             s_out, d_out, c_out = [], [], []
@@ -846,7 +797,7 @@ def knn_graph(
                 .cogroup(members.groupBy("cell"))
                 .applyInPandas(fn, out_schema))
 
-    _score = _score_fold if kernel == "fold" else _score_gemm
+    _score = _score_fold if kernel == "fold" else _score_exact
 
     if not prune:
         scored = _score(probers.drop("_prank", "_ps"))
@@ -898,96 +849,6 @@ def knn_graph(
     )
 
 
-def _semdedup_dups_gemm(e: DataFrame, threshold: float, idt) -> DataFrame:
-    """(id_b, _dup_of) rows via one per-cell gram matrix: within a
-    cell, x is a dup of the SMALLEST same-cell id with round-6 cosine
-    ≥ threshold — computed over the id-sorted member block so the
-    argmax of the first hit IS the minimum id. Same values as the
-    fold pair join (``_zeroed_cosine_matrix`` reuses the JVM norms),
-    with vectors shuffled once per cell instead of once per pair."""
-    import numpy as np
-    import pandas as pd  # noqa: F811
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([T.StructField("id_b", idt),
-                               T.StructField("_dup_of", idt)])
-
-    def fn(pdf):
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_b": [], "_dup_of": []})
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        X = np.array(pdf["vec"].to_list(), dtype="float64")[order]
-        n = pdf["_norm"].to_numpy(dtype="float64")[order]
-        S = _zeroed_cosine_matrix(X, n, X, n)
-        hit = S >= threshold
-        id_b, dup_of = [], []
-        for j in range(1, len(ids)):
-            col = hit[:j, j]
-            if col.any():
-                id_b.append(ids[j])
-                dup_of.append(ids[int(np.argmax(col))])
-        return pd.DataFrame({"id_b": np.array(id_b, dtype=object),
-                             "_dup_of": np.array(dup_of, dtype=object)})
-
-    return e.select("cell", "vec_id", "vec", "_norm") \
-        .groupBy("cell").applyInPandas(fn, out_schema)
-
-
-def _semdedup_dups_gemm_sharded(e: DataFrame, threshold: float, idt,
-                                n_shards: int) -> DataFrame:
-    """(id_b, _dup_of) rows via row-SHARDED per-cell gram matrices
-    (VERDICT r12 #7 / ROADMAP candidate #4): the plain gemm kernel's
-    parallelism collapses to n_cells tasks because each cell is one
-    Arrow group. This variant explodes every member row to all
-    ``n_shards`` shard groups of its cell (vectors ship n_shards×) and
-    each (cell, shard) task grams the FULL member block against only
-    its shard's columns — total BLAS work unchanged (n × n/s per task
-    × s tasks), parallelism n_cells × n_shards, peak task memory cut
-    by s. Verdicts are identical to the whole-cell gram: a column's
-    dup test only reads rows ABOVE it in the id sort, all of which are
-    present in every shard group."""
-    import numpy as np
-    import pandas as pd  # noqa: F811
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([T.StructField("id_b", idt),
-                               T.StructField("_dup_of", idt)])
-
-    def fn(key, pdf):
-        shard = key[1]
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_b": [], "_dup_of": []})
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        own = pdf["_shard"].to_numpy()[order]
-        X = np.array(pdf["vec"].to_list(), dtype="float64")[order]
-        n = pdf["_norm"].to_numpy(dtype="float64")[order]
-        cols = np.nonzero(own == shard)[0]
-        cols = cols[cols > 0]  # global-min id is never a dup
-        if not len(cols):
-            return pd.DataFrame({"id_b": [], "_dup_of": []})
-        S = _zeroed_cosine_matrix(X, n, X[cols], n[cols])
-        hit = S >= threshold
-        id_b, dup_of = [], []
-        for c, g in enumerate(cols):
-            col = hit[:g, c]
-            if col.any():
-                id_b.append(ids[g])
-                dup_of.append(ids[int(np.argmax(col))])
-        return pd.DataFrame({"id_b": np.array(id_b, dtype=object),
-                             "_dup_of": np.array(dup_of, dtype=object)})
-
-    exploded = (e.select("cell", "vec_id", "vec", "_norm")
-                .withColumn("_shard",
-                            F.pmod(F.xxhash64(F.col("vec_id")),
-                                   F.lit(n_shards)).cast("int"))
-                .withColumn("_grp",
-                            F.explode(F.sequence(
-                                F.lit(0), F.lit(n_shards - 1)))))
-    return exploded.groupBy("cell", "_grp").applyInPandas(fn, out_schema)
-
-
 def _argmax_cell(scores: Column) -> Column:
     """argmax via array_position(scores, array_max(scores)) — the same
     deterministic first-max rule as ``_nearest_cell``, over an already
@@ -998,7 +859,6 @@ def _argmax_cell(scores: Column) -> Column:
 def semantic_dedup(
     embeddings: DataFrame, threshold: float, *, n_cells: int | None = None,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    kernel: str = "fold", n_shards: int = 8,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
     cluster the corpus coarsely, then prune near-identical vectors
@@ -1025,29 +885,15 @@ def semantic_dedup(
     pair join is an equi-join on cell; vectors ship once into it; the
     verdict join back is keyed on id.
 
-    ``kernel``: ``"fold"`` (default) is the pair-join + Arrow pair-dot
-    — the DuckDB-oracle gate surface, and MEASURED FASTER at local
-    corpus sizes (20k rows: fold 1.4-4.8 s vs gemm 4.5-10.9 s across
-    cell sizes — the pair join broadcasts its small side and stays
-    JVM-parallel at 32 ways, while the gemm kernel's parallelism
-    collapses to n_cells tasks). ``"gemm"`` groups each cell ONCE and
-    runs a single BLAS gram matrix over its member block — vectors
-    ship into the shuffle once per CELL instead of once per PAIR, so
-    it is the shape for corpora where the pair join's vector
-    duplication (|cell| copies of every vector) dominates: cells of
-    thousands × a corpus too big to broadcast. ``"gemm_sharded"``
-    recovers the gemm kernel's lost parallelism by splitting each
-    cell's gram into ``n_shards`` column shards (n_cells × n_shards
-    tasks, vectors ship n_shards× — VERDICT r12 #7); measured numbers
-    for all three are in SCALING.md's decision table. Outputs are
-    identical (pytest parity lock across all kernels).
+    Physical form: the within-cell pair join + Arrow pair-dot, the
+    form the DuckDB-oracle gate replays. It broadcasts its small side
+    and stays JVM-parallel, which measured faster than a per-cell
+    gram matrix (plain or column-sharded) at every local corpus size
+    — SCALING.md records the numbers for the removed gram forms.
 
     Output: (vec_id, cell, is_kept ∈ {0,1}, dup_of — smallest
     triggering id, −1 when kept).
     """
-    if kernel not in ("gemm", "fold", "gemm_sharded"):
-        raise ValueError(
-            f"kernel must be 'gemm', 'gemm_sharded' or 'fold': {kernel!r}")
     n_cells = _resolve_n_cells(embeddings, n_cells)
     cents = _seed_centroids(embeddings, n_cells=n_cells,
                             id_col=id_col, vec_col=vec_col)
@@ -1057,27 +903,17 @@ def semantic_dedup(
          .withColumn("cell", _nearest_cell(F.col("vec"))).drop("_cents"))
     e = e.withColumn("_norm", l2_norm(F.col("vec")))
 
-    if kernel == "gemm":
-        dups = _semdedup_dups_gemm(e, threshold,
-                                   embeddings.schema[id_col].dataType)
-    elif kernel == "gemm_sharded":
-        dups = _semdedup_dups_gemm_sharded(
-            e, threshold, embeddings.schema[id_col].dataType, n_shards)
-    else:
-        a = e.select(F.col("vec_id").alias("id_a"), F.col("cell"),
-                     F.col("vec").alias("_va"), F.col("_norm").alias("_na"))
-        b = e.select(F.col("vec_id").alias("id_b"), F.col("cell"),
-                     F.col("vec").alias("_vb"), F.col("_norm").alias("_nb"))
-        pairs = a.join(b, "cell").filter(F.col("id_a") < F.col("id_b"))
-        pd_dot = _pair_dot_udf()
-        sim = F.when((F.col("_na") > 0) & (F.col("_nb") > 0),
-                     pd_dot(F.col("_va"), F.col("_vb"))
-                     / (F.col("_na") * F.col("_nb"))).otherwise(F.lit(0.0))
-        dups = (
-            pairs.select("id_b", F.round(sim, 6).alias("_c"), "id_a")
-            .filter(F.col("_c") >= F.lit(threshold))
-            .groupBy("id_b").agg(F.min("id_a").alias("_dup_of"))
-        )
+    a = e.select(F.col("vec_id").alias("id_a"), F.col("cell"),
+                 F.col("vec").alias("_va"), F.col("_norm").alias("_na"))
+    b = e.select(F.col("vec_id").alias("id_b"), F.col("cell"),
+                 F.col("vec").alias("_vb"), F.col("_norm").alias("_nb"))
+    pairs = a.join(b, "cell").filter(F.col("id_a") < F.col("id_b"))
+    sim = _pair_cosine("_va", "_na", "_vb", "_nb")
+    dups = (
+        pairs.select("id_b", F.round(sim, 6).alias("_c"), "id_a")
+        .filter(F.col("_c") >= F.lit(threshold))
+        .groupBy("id_b").agg(F.min("id_a").alias("_dup_of"))
+    )
     return (
         e.join(dups, e["vec_id"] == dups["id_b"], "left")
         .select("vec_id", "cell",
@@ -1167,7 +1003,7 @@ def kmeans_embeddings(embeddings: DataFrame, k: int = 8, n_iter: int = 2, *,
     base = embeddings.select(F.col(id_col),
                              as_double_array(F.col(vec_col)).alias("__v"))
     dim = len(cents[0])
-    use_arrow = _pq_kernel() == "arrow"
+    use_arrow = not _PQ_FOLD_REFERENCE
     if use_arrow:
         from . import pq_arrow
     for _ in range(n_iter):
@@ -1714,15 +1550,11 @@ def _pq_load_rotation(path: str):
     return _rotation_from_json(r)
 
 
-def _pq_kernel() -> str:
-    """Physical-form switch for the PQ encode/ADC-scan stages:
-    ``"arrow"`` (default — the measured r13 win) runs the numpy exact
-    twins in ``pq_arrow``; ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the
-    original column-expression forms (kept for parity locks and as
-    the SQL-shaped reference implementation)."""
-    import os as _os
-
-    return _os.environ.get("SPARK_GRAFT_PQ_KERNEL", "arrow")
+# The PQ/SQ8 encode and ADC-scan stages and the kmeans assignment run
+# the numpy exact twins in ``pq_arrow``. Their column-expression forms
+# stay as the SQL-shaped reference the parity tests compare against;
+# tests reach them by setting this flag, production never does.
+_PQ_FOLD_REFERENCE = False
 
 
 def _attach_pq(df: DataFrame, books: list[list[list[float]]]) -> DataFrame:
@@ -1760,9 +1592,8 @@ def pq_encode(embeddings: DataFrame, books: list[list[list[float]]], *,
     Physical form: the Arrow kernel (``pq_arrow.encode_pq`` — exact
     twin of the fold expressions, optimization r13; the higher-order-
     function column form evaluated INTERPRETED and dominated the
-    measured encode cost). ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the
-    expression path (the parity A/B lever)."""
-    if _pq_kernel() == "arrow":
+    measured encode cost)."""
+    if not _PQ_FOLD_REFERENCE:
         from . import pq_arrow
 
         return pq_arrow.encode_pq(embeddings, books, id_col=id_col,
@@ -1925,12 +1756,11 @@ def _pq_adc_rank(enc: DataFrame, q: DataFrame,
     refine stage stays in raw space (isometry — same exact
     distances, same raw-order arithmetic as the unrotated path).
 
-    Physical form: the Arrow ADC-scan kernel by default — the query
+    Physical form: the Arrow ADC-scan kernel — the query
     table is built driver-side from the collected query batch (the
     same boundedness as the former ``F.broadcast(qt)``) and the scan
-    runs vectorized (``pq_arrow.adc_scan``, exact twin);
-    ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the expression form."""
-    if _pq_kernel() == "arrow":
+    runs vectorized (``pq_arrow.adc_scan``, exact twin)."""
+    if not _PQ_FOLD_REFERENCE:
         import numpy as _np
 
         from . import pq_arrow
@@ -2065,9 +1895,8 @@ def _ivfpq_encode(df: DataFrame, cents, books, *, residual: bool,
     an isometry of its input anyway; keeping it raw keeps the
     directory layout identical with and without rotation).
 
-    Physical form: the Arrow kernel by default (see ``pq_encode``);
-    ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the expression path."""
-    if _pq_kernel() == "arrow":
+    Physical form: the Arrow kernel (see ``pq_encode``)."""
+    if not _PQ_FOLD_REFERENCE:
         from . import pq_arrow
 
         return pq_arrow.encode_ivfpq(df, cents, books, residual=residual,
@@ -2355,14 +2184,13 @@ def _ivfpq_probe(enc: DataFrame, q: DataFrame, cents, books, k: int, *,
     (after the residual subtraction when both are set), mirroring
     ``_ivfpq_encode``; cell selection and refine stay raw.
 
-    Physical form: the Arrow ADC-scan kernel by default — probe cells
+    Physical form: the Arrow ADC-scan kernel — probe cells
     AND per-(query, cell) distance tables are computed driver-side
     from the collected query batch (the same boundedness as the former
     broadcast; the partition-pruning ``cell IN`` filter on ``enc`` is
     unchanged), the scan runs vectorized (``pq_arrow.adc_scan``, exact
-    twin). ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the expression
-    form."""
-    if _pq_kernel() == "arrow":
+    twin)."""
+    if not _PQ_FOLD_REFERENCE:
         import numpy as _np
 
         from . import pq_arrow
@@ -2731,10 +2559,10 @@ def sq8_encode_col(vec: Column, mins: Column, maxs: Column) -> Column:
 
 def _sq8_encode_df(df: DataFrame, mins, maxs, *, id_col: str,
                    vec_col: str) -> DataFrame:
-    """(vec_id, codes) under the frozen grid — Arrow kernel by default
-    (``pq_arrow.encode_sq8``, exact same IEEE ops), the broadcast-grid
-    fold expression under ``SPARK_GRAFT_PQ_KERNEL=fold``."""
-    if _pq_kernel() == "arrow":
+    """(vec_id, codes) under the frozen grid — the Arrow kernel
+    (``pq_arrow.encode_sq8``, exact same IEEE ops as the broadcast-grid
+    fold expression)."""
+    if not _PQ_FOLD_REFERENCE:
         from . import pq_arrow
 
         return pq_arrow.encode_sq8(df, mins, maxs, id_col=id_col,
@@ -2783,7 +2611,7 @@ def _sq8_rank(codes_table: DataFrame, queries: DataFrame, k: int, *,
     mins, maxs = train
     if queries_raw is None:
         queries_raw = queries
-    if _pq_kernel() == "arrow":
+    if not _PQ_FOLD_REFERENCE:
         import numpy as _np
 
         from . import pq_arrow

@@ -1470,11 +1470,9 @@ def semdedup_embeddings(spark, sf_dir):
     within-cell pair join in SQL — every verdict and every ``dup_of``
     id is exact-checked, not just the keep counts."""
     emb = _t(spark, sf_dir, "embeddings")
-    # kernel="fold" pins the oracle gate surface: the SQL replays the
-    # fold's BLAS-free pair dots; the gemm kernel is pytest-parity-
-    # locked against this form (VERDICT r11 #3)
-    return similarity.semantic_dedup(emb, threshold=0.3, n_cells=8,
-                                     kernel="fold")
+    # the within-cell pair join is semantic_dedup's one form: the SQL
+    # replays its BLAS-free pair dots
+    return similarity.semantic_dedup(emb, threshold=0.3, n_cells=8)
 
 
 def _semdedup_sql(n_cells: int = 8, threshold: float = 0.3) -> str:
@@ -1604,11 +1602,12 @@ def knn_graph_embeddings(spark, sf_dir):
     measured quadratic (3.3 s -> 27.4 s on 4x vectors); 16 cells holds
     the per-cell load flat across the gate SFs."""
     emb = _t(spark, sf_dir, "embeddings")
-    # kernel="exact": the gemm cogroup shape scoring with the fold's
-    # bit-exact summation tree + round_spark (optimization r14 — the
-    # pq_arrow exact-twin discipline; exact==fold parity-locked in
-    # tests/test_round14_opt.py). The old fold form shipped both
-    # vectors through Arrow once per candidate PAIR.
+    # kernel="exact" (the default, pinned here because the oracle
+    # depends on it): per-cell cogroup scoring with the fold's bit-exact
+    # summation tree + round_spark, parity-locked against the fold
+    # reference in tests/test_round12.py and tests/test_round14_opt.py.
+    # The fold form shipped both vectors through Arrow once per
+    # candidate PAIR.
     return similarity.knn_graph(emb, k=5, n_cells=16, nprobe=2,
                                 kernel="exact")
 

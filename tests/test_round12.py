@@ -419,59 +419,33 @@ class TestDelayedCheckpointMigration:
         assert rel == [1]  # seq 2 withheld
 
 
-class TestGemmKernelAdoption:
-    """VERDICT r11 #3: the corpus-x-corpus operators route their pair
-    dots through a per-cell BLAS kernel; the fold form stays the
-    oracle-gate surface. These locks assert bit-identical OUTPUT."""
+class TestSimilarityKernelLocks:
+    """knn_graph's production form (kernel="exact", per-cell cogroup
+    scoring) must equal the fold reference bit-for-bit; semantic_dedup's
+    one form (the within-cell pair join) must resolve boundary ties to
+    the hand-computed smallest-id dup_of."""
 
-    def test_knn_graph_gemm_matches_fold_sf0001(self, spark):
+    def test_knn_graph_exact_matches_fold_gate_config(self, spark):
+        # the knn_graph_embeddings gate's n_cells / nprobe
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         fold = similarity.knn_graph(emb, k=5, n_cells=16, nprobe=2,
                                     kernel="fold")
-        gemm = similarity.knn_graph(emb, k=5, n_cells=16, nprobe=2,
-                                    kernel="gemm")
+        exact = similarity.knn_graph(emb, k=5, n_cells=16, nprobe=2,
+                                     kernel="exact")
         f = sorted(map(tuple, fold.collect()))
-        g = sorted(map(tuple, gemm.collect()))
-        assert f == g
+        assert f == sorted(map(tuple, exact.collect()))
+        assert len(f) > 0
 
-    def test_knn_graph_gemm_matches_fold_pruned(self, spark):
+    def test_knn_graph_exact_matches_fold_pruned(self, spark):
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         fold = similarity.knn_graph(emb, k=3, n_cells=8, nprobe=3,
                                     prune=True, kernel="fold")
-        gemm = similarity.knn_graph(emb, k=3, n_cells=8, nprobe=3,
-                                    prune=True, kernel="gemm")
+        exact = similarity.knn_graph(emb, k=3, n_cells=8, nprobe=3,
+                                     prune=True, kernel="exact")
         assert sorted(map(tuple, fold.collect())) == \
-            sorted(map(tuple, gemm.collect()))
+            sorted(map(tuple, exact.collect()))
 
-    def test_semdedup_gemm_matches_fold(self, spark):
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        fold = similarity.semantic_dedup(emb, threshold=0.3, n_cells=8,
-                                         kernel="fold")
-        gemm = similarity.semantic_dedup(emb, threshold=0.3, n_cells=8,
-                                         kernel="gemm")
-        assert sorted(map(tuple, fold.collect())) == \
-            sorted(map(tuple, gemm.collect()))
-
-    def test_semdedup_gemm_boundary_ties(self, spark):
-        # hand-built cell with exact-duplicate vectors (cos 1.0) and an
-        # exactly-at-threshold pair: the dup must point at the SMALLEST
-        # id in both kernels
-        rows = [
-            (1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0]),
-            (4, [0.0, 1.0]),
-        ]
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        for kern in ("fold", "gemm"):
-            out = {r.vec_id: (r.is_kept, r.dup_of)
-                   for r in similarity.semantic_dedup(
-                       emb, threshold=0.99, n_cells=2,
-                       kernel=kern).collect()}
-            assert out[1] == (1, -1)
-            assert out[2] == (0, 1)
-            assert out[3] == (0, 1)
-            assert out[4] == (1, -1)
-
-    def test_knn_graph_gemm_string_ids(self, spark):
+    def test_knn_graph_exact_string_ids(self, spark):
         import random
 
         rng = random.Random(3)
@@ -481,10 +455,35 @@ class TestGemmKernelAdoption:
             "vec_id string, embedding array<double>")
         fold = similarity.knn_graph(emb, k=3, n_cells=4, nprobe=2,
                                     kernel="fold")
-        gemm = similarity.knn_graph(emb, k=3, n_cells=4, nprobe=2,
-                                    kernel="gemm")
+        exact = similarity.knn_graph(emb, k=3, n_cells=4, nprobe=2,
+                                     kernel="exact")
         assert sorted(map(tuple, fold.collect())) == \
-            sorted(map(tuple, gemm.collect()))
+            sorted(map(tuple, exact.collect()))
+
+    def test_semdedup_boundary_ties(self, spark):
+        # exact-duplicate vectors (cos 1.0): every dup points at the
+        # SMALLEST id; the orthogonal vector stays kept
+        rows = [
+            (1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0]),
+            (4, [0.0, 1.0]),
+        ]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        out = {r.vec_id: (r.is_kept, r.dup_of)
+               for r in similarity.semantic_dedup(
+                   emb, threshold=0.99, n_cells=2).collect()}
+        assert out == {1: (1, -1), 2: (0, 1), 3: (0, 1), 4: (1, -1)}
+
+    def test_semdedup_at_threshold_tie(self, spark):
+        # one cell: 1-3 are duplicates (cos 1.0); cos(4, 1) = 0.6 keeps
+        # 4; cos(5, 4) = 0.8 sits exactly AT the threshold and drops 5
+        rows = [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0]),
+                (4, [0.6, 0.8]), (5, [0.0, 1.0])]
+        emb = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>")
+        out = sorted(map(tuple, similarity.semantic_dedup(
+            emb, threshold=0.8, n_cells=1).collect()))
+        assert out == [(1, 0, 1, -1), (2, 0, 0, 1), (3, 0, 0, 1),
+                       (4, 0, 1, -1), (5, 0, 0, 4)]
 
 
 class TestScd2History:

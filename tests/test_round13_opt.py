@@ -1,6 +1,6 @@
 """Round-13 optimization locks: the Arrow PQ kernels are EXACT twins
-of the fold-expression forms they replaced (pq_arrow vs the
-SPARK_GRAFT_PQ_KERNEL=fold reference path)."""
+of the fold-expression reference forms (pq_arrow vs the path
+similarity._PQ_FOLD_REFERENCE selects)."""
 
 import os
 
@@ -38,15 +38,17 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def _both(fn):
-    os.environ["SPARK_GRAFT_PQ_KERNEL"] = "arrow"
-    try:
+@pytest.fixture
+def _both(monkeypatch):
+    """fn -> (Arrow rows, fold-reference rows) of the same computation."""
+    def run(fn):
+        monkeypatch.setattr(S, "_PQ_FOLD_REFERENCE", False)
         a = _rows(fn())
-        os.environ["SPARK_GRAFT_PQ_KERNEL"] = "fold"
+        monkeypatch.setattr(S, "_PQ_FOLD_REFERENCE", True)
         b = _rows(fn())
-    finally:
-        os.environ.pop("SPARK_GRAFT_PQ_KERNEL", None)
-    return a, b
+        monkeypatch.setattr(S, "_PQ_FOLD_REFERENCE", False)
+        return a, b
+    return run
 
 
 def _q(emb):
@@ -55,7 +57,7 @@ def _q(emb):
                     S.as_double_array(F.col("embedding")).alias("qv")))
 
 
-def test_encode_parity(emb, trained):
+def test_encode_parity(emb, trained, _both):
     cents, books = trained
     rot = S.pq_rotation(64)
     for kw in ({}, {"rotation": rot}):
@@ -64,7 +66,7 @@ def test_encode_parity(emb, trained):
         assert a == b and len(a) > 0
 
 
-def test_ivfpq_encode_parity(emb, trained):
+def test_ivfpq_encode_parity(emb, trained, _both):
     cents, books = trained
     rot = S.pq_rotation(64)
     for kw in ({"residual": False}, {"residual": True, "rotation": rot}):
@@ -74,7 +76,7 @@ def test_ivfpq_encode_parity(emb, trained):
         assert a == b and len(a) > 0
 
 
-def test_adc_rank_parity(emb, trained):
+def test_adc_rank_parity(emb, trained, _both):
     _, books = trained
     q = _q(emb)
     enc = S.pq_encode(emb, books)
@@ -88,7 +90,7 @@ def test_adc_rank_parity(emb, trained):
     assert a == b and len(a) > 0
 
 
-def test_ivfpq_probe_parity(emb, trained):
+def test_ivfpq_probe_parity(emb, trained, _both):
     cents, books = trained
     rot = S.pq_rotation(64)
     q = _q(emb)
@@ -134,7 +136,7 @@ def test_round_spark_twin():
     assert got9 == want9
 
 
-def test_sq8_parity(emb):
+def test_sq8_parity(emb, _both):
     """SQ8 arrow scan + encode == the fold expression forms."""
     a, b = _both(lambda: S.sq8_topk(
         emb, emb.filter(F.col("vec_id") < 5)
@@ -144,7 +146,7 @@ def test_sq8_parity(emb):
     assert a == b and len(a) > 0
 
 
-def test_kmeans_parity(emb):
+def test_kmeans_parity(emb, _both):
     """kmeans arrow assignment == the fold expression assignment."""
     a, b = _both(lambda: S.kmeans_embeddings(emb, k=4, n_iter=2))
     assert a == b and len(a) > 0

@@ -111,6 +111,33 @@ def test_head50_entries_carry_local_proof():
         f"run tools/gen_head50_proof.py before rotating them in")
 
 
+def test_stale_slow_manifest_ids(tmp_path):
+    """A tests/slow_tests.json id that names no collected test is
+    reported when its module was collected whole or no longer exists;
+    a module narrowed by a ``file::test`` argument is not judged."""
+    from types import SimpleNamespace as NS
+
+    from conftest import _stale_manifest_ids
+
+    (tmp_path / "tests").mkdir()
+    mod = tmp_path / "tests" / "test_a.py"
+    mod.write_text("")
+    items = [NS(path=mod, nodeid="tests/test_a.py::test_kept")]
+    slow = {"tests/test_a.py::test_kept", "tests/test_a.py::test_renamed",
+            "tests/test_gone.py::test_x"}
+
+    def config(*args):
+        return NS(getoption=lambda name, default=None: default,
+                  invocation_params=NS(dir=tmp_path), args=list(args),
+                  rootpath=tmp_path)
+
+    assert _stale_manifest_ids(config("tests"), items, slow) == [
+        "tests/test_a.py::test_renamed", "tests/test_gone.py::test_x"]
+    assert _stale_manifest_ids(
+        config("tests/test_a.py::test_kept"), items, slow) == [
+        "tests/test_gone.py::test_x"]
+
+
 def test_ln_snap_is_boundary_safe_for_small_degrees():
     """m9 = round(ln(k)*1e9) is the one engine-side float op left in
     link_prediction; assert every k <= 200 sits >= 1e-4 from a .5
@@ -198,7 +225,7 @@ class TestScd2BucketedState:
 
 
 def test_knn_graph_exact_kernel_matches_fold(spark):
-    """kernel='exact' (gemm cogroup shape + fold summation tree +
+    """kernel='exact' (per-cell cogroup shape + fold summation tree +
     round_spark) must reproduce the fold form bit-for-bit — the gate
     pins 'exact', the oracle replays 'fold'."""
     from incubator_pulsar_spark.functions import similarity
