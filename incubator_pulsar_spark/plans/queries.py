@@ -169,11 +169,7 @@ def _stream_shuffle_partitions(spark, n_keys: int) -> int:
     per batch) but the floor of 8 WINS over it on runners narrower
     than 8 cores (ADVICE r13 — max(8, min(dp, ·)) returns 8 when
     dp < 8, which is intended: 8 state partitions on 4 cores cost two
-    task waves, cheaper than starving the per-group Arrow work).
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides for cluster tuning."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    task waves, cheaper than starving the per-group Arrow work)."""
     dp = spark.sparkContext.defaultParallelism
     return max(8, min(dp, -(-int(n_keys) // 128)))
 

@@ -4,7 +4,6 @@ parity is the contract, pytest- and gate-locked)."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
@@ -12,6 +11,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .keyed_state import keyed_state
 
 MARKOV_STATE_SCHEMA = T.StructType([
     T.StructField("last_state", T.StringType()),
@@ -56,16 +57,13 @@ def markov_stream(
         T.StructField("n_dropped_late", T.LongType()),
     ])
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_state, last_order, n_dropped = state.get
+    def fold(_key: Any, state, rows, _wm) -> tuple:
+        if state is not None:
+            last_state, last_order, n_dropped = state
         else:
             last_state, last_order, n_dropped = None, None, 0
-        rows = []
-        for pdf in pdfs:
-            for s, o in zip(pdf[state_col], pdf[order_col]):
-                rows.append((int(o), None if pd.isna(s) else str(s)))
-        rows.sort(key=lambda r: r[0])
+        rows = sorted(((int(o), None if pd.isna(s) else str(s))
+                       for o, s in rows), key=lambda r: r[0])
         deltas: dict[tuple, int] = {}
         dropped_this_batch = False
         for o, s in rows:
@@ -77,24 +75,20 @@ def markov_stream(
                 k = (last_state, s)
                 deltas[k] = deltas.get(k, 0) + 1
             last_state, last_order = s, o
-        if rows:
-            state.update((last_state, last_order, n_dropped))
         out = [(a, b, n, n_dropped) for (a, b), n in deltas.items()]
         if dropped_this_batch and not out:
             # dropped-rows marker: keeps the counter observable even
             # when the batch produced no transitions
             out = [(None, None, 0, n_dropped)]
-        if out:
-            yield pd.DataFrame(
-                out, columns=["state", "next_state", "n_delta",
-                              "n_dropped_late"])
+        return (last_state, last_order, n_dropped), out
 
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(order_col).cast("long").alias(order_col),
         F.col(state_col).cast("string").alias(state_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, MARKOV_STATE_SCHEMA, "append", "NoTimeout")
+    return keyed_state(keyed, fold, columns=[order_col, state_col],
+                       state_schema=MARKOV_STATE_SCHEMA,
+                       out_schema=out_schema)
 
 
 RETENTION_STATE_SCHEMA = T.StructType([
@@ -143,42 +137,31 @@ def retention_stream(
         T.StructField("n_dropped_late", T.LongType()),
     ])
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            first, seen_list, n_dropped = state.get
+    def fold(_key: Any, state, rows, _wm) -> tuple:
+        if state is not None:
+            first, seen_list, n_dropped = state
             seen = set(seen_list or [])
         else:
             first, seen, n_dropped = None, set(), 0
-        periods = []
-        for pdf in pdfs:
-            for o in pdf[order_col]:
-                periods.append(int((int(o) - anchor) // period))
-        periods.sort()
+        periods = sorted(int((int(o) - anchor) // period) for (o,) in rows)
         out = []
-        changed = False
         for p in periods:
             if first is None:
                 first = p
             if p < first:
                 n_dropped += 1  # would rewrite the cohort: late, counted
-                changed = True
                 continue
             if p not in seen:
                 seen.add(p)
                 out.append((first, p - first, 1, n_dropped))
-                changed = True
-        if changed or (periods and not state.exists):
-            state.update((first, sorted(seen), n_dropped))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["cohort", "week_offset", "delta",
-                              "n_dropped_late"])
+        return (first, sorted(seen), n_dropped), out
 
     keyed = stream.select(
         F.col(user_col).cast("string").alias("key"),
         F.col(order_col).cast("long").alias(order_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, RETENTION_STATE_SCHEMA, "append", "NoTimeout")
+    return keyed_state(keyed, fold, columns=[order_col],
+                       state_schema=RETENTION_STATE_SCHEMA,
+                       out_schema=out_schema)
 
 
 TWAP_STATE_SCHEMA = T.StructType([
@@ -233,16 +216,12 @@ def twap_stream(
         T.StructField("n_dropped_late", T.LongType()),
     ])
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_o, last_v, n_dropped = state.get
+    def fold(key: Any, state, rows, _wm) -> tuple:
+        if state is not None:
+            last_o, last_v, n_dropped = state
         else:
             last_o, last_v, n_dropped = None, None, 0
-        rows = []
-        for pdf in pdfs:
-            for o, v in zip(pdf[order_col], pdf[value_col]):
-                rows.append((int(o), int(v)))
-        rows.sort()
+        rows = sorted((int(o), int(v)) for o, v in rows)
         n = dur = wsum = 0
         dropped_this_batch = False
         for o, v in rows:
@@ -256,20 +235,18 @@ def twap_stream(
                 dur += d
                 wsum += last_v * d  # Python bigint: exact, unbounded
             last_o, last_v = o, v
-        if rows:
-            state.update((last_o, last_v, n_dropped))
+        out = []
         if n or dropped_this_batch:
-            yield pd.DataFrame(
-                [(key[0], n, dur, Decimal(wsum).scaleb(-4), n_dropped)],
-                columns=["key", "n_delta", "dur_delta", "wsum_delta",
-                         "n_dropped_late"])
+            out.append((key, n, dur, Decimal(wsum).scaleb(-4), n_dropped))
+        return (last_o, last_v, n_dropped), out
 
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(order_col).cast("long").alias(order_col),
         F.col(value_col).cast("long").alias(value_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, TWAP_STATE_SCHEMA, "append", "NoTimeout")
+    return keyed_state(keyed, fold, columns=[order_col, value_col],
+                       state_schema=TWAP_STATE_SCHEMA,
+                       out_schema=out_schema)
 
 
 ENTROPY_STATE_SCHEMA = T.StructType([
@@ -313,32 +290,25 @@ def entropy_stream(
         T.StructField("counts", T.ArrayType(T.LongType())),
     ])
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            states, counts, version = state.get
+    def fold(key: Any, state, rows, _wm) -> tuple:
+        if state is not None:
+            states, counts, version = state
             m = dict(zip(states, counts))
         else:
             m, version = {}, 0
-        n_new = 0
-        for pdf in pdfs:
-            for s in pdf[state_col]:
-                s = None if pd.isna(s) else str(s)
-                m[s] = m.get(s, 0) + 1
-                n_new += 1
-        if n_new:
-            version += 1
-            # NULL state sorts first (deterministic emission order)
-            items = sorted(m.items(),
-                           key=lambda kv: (kv[0] is not None, kv[0]))
-            ks = [k for k, _ in items]
-            vs = [int(v) for _, v in items]
-            state.update((ks, vs, version))
-            yield pd.DataFrame(
-                [(key[0], version, ks, vs)],
-                columns=["key", "version", "states", "counts"])
+        for (s,) in rows:
+            s = None if pd.isna(s) else str(s)
+            m[s] = m.get(s, 0) + 1
+        version += 1
+        # NULL state sorts first (deterministic emission order)
+        items = sorted(m.items(), key=lambda kv: (kv[0] is not None, kv[0]))
+        ks = [k for k, _ in items]
+        vs = [int(v) for _, v in items]
+        return (ks, vs, version), [(key, version, ks, vs)]
 
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(state_col).cast("string").alias(state_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, ENTROPY_STATE_SCHEMA, "append", "NoTimeout")
+    return keyed_state(keyed, fold, columns=[state_col],
+                       state_schema=ENTROPY_STATE_SCHEMA,
+                       out_schema=out_schema)

@@ -6,7 +6,6 @@ pattern — batch==stream parity is the contract).
 from __future__ import annotations
 
 import bisect
-from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
@@ -14,6 +13,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .keyed_state import keyed_state
 
 INTERVAL_STATE_SCHEMA = T.StructType([
     T.StructField("hwm_start", T.LongType()),
@@ -69,25 +70,24 @@ def interval_stream(
         T.StructField("n_dropped_late", T.LongType()),
     ])
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            hwm, frontier, open_ends, peak, n_dropped = state.get
+    def fold(key: Any, state, rows, _wm) -> tuple:
+        if state is not None:
+            hwm, frontier, open_ends, peak, n_dropped = state
             open_ends = list(open_ends or [])
         else:
             hwm, frontier, open_ends, peak, n_dropped = (
                 None, None, [], 0, 0)
-        rows = []
-        for pdf in pdfs:
-            for s, e in zip(pdf[start_col], pdf[end_col]):
-                if pd.isna(s) or pd.isna(e):
-                    continue
-                s, e = int(s), int(e)
-                if e > s:
-                    rows.append((s, e))
-        rows.sort()
+        spans = []
+        for s, e in rows:
+            if pd.isna(s) or pd.isna(e):
+                continue
+            s, e = int(s), int(e)
+            if e > s:
+                spans.append((s, e))
+        spans.sort()
         n = total = covered = 0
         dropped_this_batch = False
-        for s, e in rows:
+        for s, e in spans:
             if hwm is not None and s < hwm:
                 n_dropped += 1
                 dropped_this_batch = True
@@ -107,16 +107,15 @@ def interval_stream(
                 if e > frontier:
                     covered += e - frontier
                     frontier = e
-        if n or dropped_this_batch:
-            state.update((hwm, frontier, open_ends, peak, n_dropped))
-            yield pd.DataFrame(
-                [(key[0], n, total, covered, peak, n_dropped)],
-                columns=["key", "n_delta", "total_delta",
-                         "covered_delta", "peak", "n_dropped_late"])
+        if not (n or dropped_this_batch):
+            return state, []
+        return ((hwm, frontier, open_ends, peak, n_dropped),
+                [(key, n, total, covered, peak, n_dropped)])
 
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(start_col).cast("long").alias(start_col),
         F.col(end_col).cast("long").alias(end_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, INTERVAL_STATE_SCHEMA, "append", "NoTimeout")
+    return keyed_state(keyed, fold, columns=[start_col, end_col],
+                       state_schema=INTERVAL_STATE_SCHEMA,
+                       out_schema=out_schema)

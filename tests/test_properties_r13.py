@@ -6,6 +6,7 @@ sweep-line / inequality / drift / survival / basket families."""
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -91,8 +92,10 @@ def test_hhi_matches_share_model(spark, rows):
     if s == 0:
         assert r.hhi is None
     else:
-        assert r.hhi == round(sum(x * x for x in per.values())
-                              / (s * s), 6)
+        # Spark's round() is HALF_UP on the double's decimal form;
+        # Python's round() would take an exact tie (178/256) half-even
+        q = Decimal(repr(sum(x * x for x in per.values()) / (s * s)))
+        assert r.hhi == float(q.quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 @given(a=st.lists(st.integers(0, 20), min_size=1, max_size=15),
