@@ -25,6 +25,9 @@ from pyspark.sql import functions as F
 
 _WEEK_MS = 7 * 86_400_000
 
+# cusum_max casts row counts to decimal(7,0): a group this large raises
+CUSUM_MAX_GROUP_ROWS = 10**7
+
 
 def cohort_retention(df: DataFrame, *, user_col: str = "user_id",
                      ts_col: str = "ts",
@@ -248,8 +251,8 @@ def rfm_segments(df: DataFrame, *, entity_col: str, ts_col: str = "ts",
 
     Epoch extraction is SESSION-TIMEZONE-PROOF: the NTZ timestamp is
     decomposed into date-diff days + hour/minute/second parts
-    (second granularity — sub-second activity logs should pre-floor),
-    never CAST to TIMESTAMP, so a non-UTC driver session cannot shift
+    (millisecond granularity; sub-millisecond digits floor), never
+    CAST to TIMESTAMP, so a non-UTC driver session cannot shift
     recency (an NTZ→TIMESTAMP cast reinterprets in the session zone,
     and DST makes the shift date-dependent — it does NOT cancel in
     anchor−last). Monetary is integer 1e-4 units (BIGINT — the
@@ -269,7 +272,7 @@ def rfm_segments(df: DataFrame, *, entity_col: str, ts_col: str = "ts",
           * 86_400_000
           + F.hour(c).cast("long") * 3_600_000
           + F.minute(c).cast("long") * 60_000
-          + F.second(c).cast("long") * 1_000)
+          + (F.date_part(F.lit("SECOND"), c) * 1_000).cast("long"))
     x4 = (F.col(value_col).cast("decimal(18,4)") * 10000).cast("long")
     per = (df.select(F.col(entity_col).alias("entity"), ms.alias("_ms"),
                      x4.alias("_v4"))
@@ -321,9 +324,11 @@ def cusum_max(df: DataFrame, group_cols: list[str], *,
     statistic break to the SMALLEST k. One shuffle (the group sort
     window; every later window reuses the same partitioning).
 
-    Overflow budget: N·S_k < 10³⁷ holds to ~10⁷ rows × 10⁵-scale
-    values per group; the BIGINT output caps at ~9·10¹⁸ (≈10⁵ rows ×
-    10⁹ quarter-unit group sums — raise to a micro→milli unit ingest
+    Overflow budget: N and k cast to decimal(7,0), so a group of
+    ``CUSUM_MAX_GROUP_ROWS`` (10⁷) rows or more raises instead of
+    overflowing the cast; N·S_k < 10³⁷ holds below that for 10⁵-scale
+    values. The BIGINT output caps at ~9·10¹⁸ (≈10⁵ rows × 10⁹
+    quarter-unit group sums — raise to a micro→milli unit ingest
     before hitting it).
 
     Output: group_cols + (n BIGINT, max_stat4 BIGINT — the statistic
@@ -341,6 +346,12 @@ def cusum_max(df: DataFrame, group_cols: list[str], *,
                 w.rowsBetween(Window.unboundedPreceding, 0))
                 .cast("decimal(30,0)"))
             .withColumn("_n", F.count(F.lit(1)).over(wg))
+            .withColumn("_n", F.when(
+                F.col("_n") >= CUSUM_MAX_GROUP_ROWS,
+                F.raise_error(F.concat(
+                    F.lit("cusum_max: a group has "), F.col("_n").cast("string"),
+                    F.lit(f" rows; groups must have fewer than {CUSUM_MAX_GROUP_ROWS}"))))
+                .otherwise(F.col("_n")))
             .withColumn("_sn", F.sum("_v4").over(wg)
                         .cast("decimal(30,0)")))
     stat = F.abs(

@@ -29,7 +29,10 @@ def gini(df: DataFrame, group_cols: list[str],
 
         G = (2·Σ i·x₍ᵢ₎ − (n+1)·Σx) / (n·Σx)
 
-    Values must be non-negative (the Lorenz-curve domain); NULLs drop.
+    Values must be non-negative (the Lorenz-curve domain, and the
+    exact rounding below is half-up only for non-negative sums): a
+    group holding a negative value (a refund row, say) raises. NULLs
+    drop.
     Equal values make Σ i·x₍ᵢ₎ order-invariant (positions i and j swap
     between equal x's without moving the sum), so the sort needs no
     tiebreak and the result is deterministic on any engine.
@@ -58,6 +61,7 @@ def gini(df: DataFrame, group_cols: list[str],
     agg = ranked.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("_x4").cast("long").alias("sum_value4"),
+        F.min("_x4").alias("_min4"),
         F.sum(F.col("_x4").cast("decimal(28,0)")).alias("_s4"),
         F.sum(F.col("_i").cast("decimal(19,0)")
               * F.col("_x4").cast("decimal(18,0)")).alias("_w"))
@@ -70,8 +74,11 @@ def gini(df: DataFrame, group_cols: list[str],
             .withColumn("_num6", num * F.lit(1000000).cast("decimal(7,0)"))
             .withColumn("_den", den)
             .select(*group_cols, "n", "sum_value4",
-                    F.when(F.col("_den") != 0,
-                           g6.cast("double") / 1000000.0).alias("gini")))
+                    F.when(F.col("_min4") < 0, F.raise_error(F.lit(
+                        "gini: a group holds a negative value; gini needs "
+                        "values >= 0")))
+                    .when(F.col("_den") != 0,
+                          g6.cast("double") / 1000000.0).alias("gini")))
 
 
 def hhi(df: DataFrame, group_cols: list[str], entity_col: str,

@@ -12,6 +12,17 @@ Scale posture: these defaults are chosen to behave the same on
   hot path).
 - ``maxPartitionBytes`` left at 128m: at 100 TB that is ~800k input splits,
   which is the right granularity for 1000 executors x 8 cores.
+- Python workers fork from ``incubator_pulsar_spark.pydaemon``
+  (``spark.python.daemon.module``). Each Python task calls
+  ``importlib.invalidate_caches()``, which on CPython < 3.13 re-reads
+  ``pyspark.zip``'s 1,328-entry directory once per cached zipimporter:
+  about 0.23 s of CPU per task, more than half of all Python-worker CPU
+  in a small-batch ``applyInPandasWithState`` stream. The daemon re-reads
+  only archives that changed. Executors must be able to import this
+  package when the daemon starts, before any task runs, so
+  ``--py-files`` alone arrives too late: ``get_spark`` prepends the
+  package's parent directory to ``spark.executorEnv.PYTHONPATH``, which
+  holds on one host; a cluster installs the package on every executor.
 """
 
 from __future__ import annotations
@@ -19,6 +30,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding this package: Python workers import the daemon from it
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -54,10 +68,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        .config("spark.python.daemon.module", "incubator_pulsar_spark.pydaemon")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            b = b.config(k, v)
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
+    for k, v in conf.items():
+        b = b.config(k, v)
     return b.getOrCreate()
 
 

@@ -588,6 +588,23 @@ class TestBehaviorOperators:
                                tiebreak_col="event_id").collect()[0]
         assert r.max_stat4 == 0  # constant series: no shift
 
+    def test_cusum_group_at_row_limit_raises(self, spark, monkeypatch):
+        import datetime as dt
+
+        from incubator_pulsar_spark.functions import behavior
+
+        monkeypatch.setattr(behavior, "CUSUM_MAX_GROUP_ROWS", 3)
+        t0 = dt.datetime(2024, 1, 1)
+        rows = [(g, t0 + dt.timedelta(seconds=i), i, float(i))
+                for g, n in (("small", 2), ("big", 3)) for i in range(n)]
+        df = spark.createDataFrame(
+            rows, "grp string, ts timestamp, event_id long, value double")
+        small = behavior.cusum_max(df.filter("grp = 'small'"), ["grp"],
+                                   tiebreak_col="event_id").collect()
+        assert [r.n for r in small] == [2]
+        with pytest.raises(Exception, match="cusum_max: a group has 3 rows"):
+            behavior.cusum_max(df, ["grp"], tiebreak_col="event_id").collect()
+
 
 class TestBfsHops:
     def test_path_distances_and_unreached(self, spark):

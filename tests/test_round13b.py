@@ -323,6 +323,14 @@ class TestConcentration:
                 .collect()[0].gini for p in (1, 3, 7)}
         assert len(vals) == 1
 
+    def test_gini_refund_row_raises(self, spark):
+        from incubator_pulsar_spark.functions import concentration
+
+        rows = [("g", 10.0), ("g", 4.0), ("g", -3.5), ("ok", 1.0)]
+        df = spark.createDataFrame(rows, "g string, v double")
+        with pytest.raises(Exception, match="gini: a group holds a negative"):
+            concentration.gini(df, ["g"], "v").collect()
+
     def test_hhi_monopoly_and_uniform(self, spark):
         from incubator_pulsar_spark.functions import concentration
 
@@ -753,3 +761,17 @@ class TestRfmSegments:
             df, entity_col="e", ts_col="ts", value_col="v",
             anchor_ms=anchor).collect()[0]
         assert r.recency_ms == 5000
+
+    def test_recency_keeps_milliseconds(self, spark):
+        import datetime as dt
+
+        from incubator_pulsar_spark.functions import behavior
+
+        t0 = dt.datetime(2024, 1, 1, 23, 59, 59, 900_000)
+        rows = [(e, t0 + dt.timedelta(milliseconds=250 * i), 1.0)
+                for i, e in enumerate("ABC")]
+        df = spark.createDataFrame(rows, "e string, ts timestamp_ntz, v double")
+        got = {r.entity: r.recency_ms for r in behavior.rfm_segments(
+            df, entity_col="e", ts_col="ts", value_col="v").collect()}
+        # anchor = C's 2024-01-02 00:00:00.400; A is 500 ms, B 250 ms before it
+        assert got == {"A": 500, "B": 250, "C": 0}
